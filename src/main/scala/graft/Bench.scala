@@ -34,6 +34,15 @@ object Bench {
     "scd2_build", "g_funnel", "text_fertility", "retrieval_rm3",
     "sft_flatten", "dq_constraints", "text_unigram_lm") ++ RotatedIn
 
+  /** Class and first message line of a failure, also printed on stderr —
+    * a failed query or warm-up step must say why. */
+  private def report(what: String, e: Throwable): String = {
+    val line = Option(e.getMessage).flatMap(_.linesIterator.nextOption()).getOrElse("")
+    val text = s"${e.getClass.getName}: $line"
+    System.err.println(s"[bench] $what failed: $text")
+    text
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -60,7 +69,7 @@ object Bench {
         SparkEntry.queries(q)(spark, sfDir).count())
       graft.queries.Q.tableNames
         .foreach(t => graft.queries.Q.table(spark, sfDir, t).count())
-    } catch { case _: Throwable => () }
+    } catch { case e: Throwable => report("warm-up", e) }
     // optional args: run only these queries (local profiling — the
     // driver always invokes with no args, timing the full surface)
     val only: Set[String] = args.toSet
@@ -68,12 +77,14 @@ object Bench {
       .filter { case (name, _) => only.isEmpty || only(name) }
       .map { case (name, fn) =>
       val t0 = System.nanoTime()
-      val ok = try { fn(spark, sfDir).count(); true } catch { case _: Throwable => false }
+      val error = try { fn(spark, sfDir).count(); None }
+        catch { case e: Throwable => Some(report(name, e)) }
       val dt = (System.nanoTime() - t0) / 1e9
       // a query's retained cache must not occupy memory (and skew GC)
       // for the 130+ queries after it
-      try spark.catalog.clearCache() catch { case _: Throwable => () }
-      (name, dt, ok)
+      try spark.catalog.clearCache()
+      catch { case e: Throwable => report(s"$name clearCache", e) }
+      (name, dt, error)
     }
     // Millisecond precision keeps the JSON line ~2.5x shorter (the driver
     // snapshots a bounded tail of stdout; full doubles overflowed it and
@@ -82,11 +93,14 @@ object Bench {
       .setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
     val qs = results.map { case (k, v, _) => "\"" + k + "\":" + fmt(v) }
       .mkString("{", ",", "}")
-    val failed = results.collect { case (k, _, false) => "\"" + k + "\"" }
+    val failed = results.collect { case (k, _, Some(_)) => "\"" + k + "\"" }
       .mkString("[", ",", "]")
+    val errorMap = new java.util.TreeMap[String, String]()
+    results.foreach { case (k, _, e) => e.foreach(errorMap.put(k, _)) }
+    val errors = new com.fasterxml.jackson.databind.ObjectMapper().writeValueAsString(errorMap)
     val total = results.map(_._2).sum
     val line =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"failed":$failed,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"failed":$failed,"errors":$errors,"sf":"$sfDir"}"""
     // BENCH_r06/r07/r08 all came back "parsed": null, and the r8 snapshot
     // starts MID-LINE ~75% into the full JSON (at "q_arith") — the
     // driver's stdout window is BOUNDED (~a few KB) and the 196-query

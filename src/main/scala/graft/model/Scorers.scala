@@ -52,12 +52,14 @@ object Scorers {
   /** Wrap a fitted MLlib probabilistic classifier into the engine's
     * scoring contract (shared by every scorer — one place to change the
     * proba/argmax/column conventions). The MLlib model stays reachable
-    * for artifact persistence (ModelIO, S7). */
+    * for artifact persistence (ModelIO, S7); its training summary is
+    * dropped, since it would carry the session into every scoring task. */
   private[model] def wrapTransformer(m: org.apache.spark.ml.Transformer): WindowModel =
     new WindowModel with HasMlModel {
-      val mlModel: org.apache.spark.ml.Transformer = m
+      val mlModel: org.apache.spark.ml.Transformer =
+        org.apache.spark.ml.graft.SummaryShim.dropSummary(m)
       def transform(df: DataFrame, wc: String): DataFrame =
-        m.transform(df.withColumn("__features", features(wc)))
+        mlModel.transform(df.withColumn("__features", features(wc)))
           .withColumn("proba", vector_to_array(col("probability")).cast("array<double>"))
           .withColumn("y_pred", argmax(col("proba")))
           .drop("__features", "rawPrediction", "probability", "prediction")

@@ -77,6 +77,9 @@ object SlidingWindows {
     * its windows independently with an ordinary partitioned window frame.
     * Cost: one global rank + one narrow duplication of a `(seqLen-1) /
     * chunkSize` fraction of rows — embarrassingly parallel afterwards.
+    * With `groupCols`, each group is its own sequence — [[slideGlobal]]
+    * run on each group alone (`win_id` restarts at 1, no window crosses
+    * groups) — and all groups share the one range exchange.
     */
   def slideGlobalChunked(
       df: DataFrame,
@@ -84,12 +87,13 @@ object SlidingWindows {
       features: Column,
       seqLen: Int,
       step: Int,
-      chunkSize: Int = 65536): DataFrame = {
+      chunkSize: Int = 65536,
+      groupCols: Seq[String] = Nil): DataFrame = {
     require(chunkSize >= seqLen, "chunkSize must be >= seqLen")
     // global rank via the fused distributed index (round 3) — this form
     // now has NO single-partition stage either; it remains the
     // collect_list-based comparison baseline for the streaming form
-    val ranked = withGlobalIndex(df, orderCols, "__rn")
+    val ranked = withGlobalIndex(df, orderCols, "__rn", groupCols = groupCols)
     // Home chunk of each row, plus a copy into the NEXT chunk for rows in
     // the trailing seqLen-1 positions (they seed the next chunk's frames).
     val home = ranked.withColumn("__chunk", ((col("__rn") - 1) / chunkSize).cast("long"))
@@ -97,7 +101,8 @@ object SlidingWindows {
       .where(pmod(col("__rn") - 1, lit(chunkSize)) >= chunkSize - (seqLen - 1))
       .withColumn("__chunk", ((col("__rn") - 1) / chunkSize).cast("long") + 1)
     val chunked = if (seqLen == 1) home else home.unionByName(tail)
-    val w = Window.partitionBy(col("__chunk")).orderBy(col("__rn"))
+    val w = Window.partitionBy((groupCols.map(col) :+ col("__chunk")): _*)
+      .orderBy(col("__rn"))
     chunked
       .withColumn("window", collect_list(features).over(w.rowsBetween(-(seqLen - 1), 0)))
       // A row is a real window end only in its HOME chunk, with a full frame
@@ -148,27 +153,45 @@ object SlidingWindows {
     * computed twice anymore. Partitions are sorted in executor memory —
     * size them via `numPartitions` (the range partitioner balances rows);
     * RDD used deliberately: per-partition imperative logic is the
-    * documented exception (builder brief). */
+    * documented exception (builder brief).
+    * With `groupCols` (atomic types) the index restarts at 1 per group:
+    * groups lead the range order, so pass 1 counts rows per (partition,
+    * group) and pass 2 resumes each group at its rows in earlier
+    * partitions — a table of at most partitions + groups entries. */
   def withGlobalIndex(df: DataFrame, orderCols: Seq[Column], out: String,
-      numPartitions: Int = 0): DataFrame = {
+      numPartitions: Int = 0, groupCols: Seq[String] = Nil): DataFrame = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
     val parts = if (numPartitions > 0) numPartitions
       else df.sparkSession.sessionState.conf.numShufflePartitions
-    val (withOrd, ordNames) = materializeOrder(df, orderCols)
+    val (withOrd, ordNames) = materializeOrder(df, groupCols.map(col) ++ orderCols)
     val ranged = withOrd.repartitionByRange(parts, ordNames.map(col): _*)
     val rdd = ranged.rdd
-    // pass 1 — counts only, unsorted (order-independent)
-    val counts = rdd.mapPartitionsWithIndex((i, it) => Iterator((i, it.size)))
-      .collect().sortBy(_._1).map(_._2.toLong)
-    val offsets = counts.scanLeft(0L)(_ + _)
+    val groupIdx = ordNames.take(groupCols.size).map(ranged.schema.fieldIndex)
+    val groupOf = (r: Row) => groupIdx.map(r.get)
+    // pass 1 — row counts per group, unsorted (order-independent)
+    val counts = rdd.mapPartitionsWithIndex { (i, it) =>
+      val m = scala.collection.mutable.HashMap.empty[Seq[Any], Long]
+      if (groupIdx.isEmpty) m(Nil) = it.size.toLong
+      else it.foreach { r => val g = groupOf(r); m(g) = m.getOrElse(g, 0L) + 1 }
+      Iterator((i, m.toMap))
+    }.collect().sortBy(_._1).map(_._2)
+    val seen = scala.collection.mutable.HashMap.empty[Seq[Any], Long]
+    val carries = counts.map(_.map { case (g, n) =>
+      val c = seen.getOrElse(g, 0L); seen(g) = c + n; g -> c })
     val ord = rowOrdering(ordNames.map(ranged.schema.fieldIndex))
     // pass 2 — the only sort, then index
     val indexed = rdd.mapPartitionsWithIndex { (i, it) =>
       val arr = it.toArray
       java.util.Arrays.sort(arr, ord)
-      var k = offsets(i)
-      arr.iterator.map { r => k += 1; Row.fromSeq(r.toSeq :+ k) }
+      var g: Seq[Any] = null
+      var k = 0L
+      arr.iterator.map { r =>
+        val rg = groupOf(r)
+        if (rg != g) { g = rg; k = carries(i)(rg) }
+        k += 1
+        Row.fromSeq(r.toSeq :+ k)
+      }
     }
     val schema = StructType(ranged.schema.fields :+ StructField(out, LongType, nullable = false))
     df.sparkSession.createDataFrame(indexed, schema).drop(ordNames: _*)

@@ -16,11 +16,12 @@ import graft.ops._
   *  - pipeline3B generalization: pipeline_tests_power.py:484-785 → [[Pipeline3.leaveOneAttackOut]]
   *
   * Every stage is ONE lazy DataFrame plan up to its sink: scan → labels →
-  * split (one shuffle) → scale (one collected agg row) → windows (one
-  * ordered exchange) → score → metric aggregations. Driver loops exist
-  * only where the reference's semantics are inherently iterative (grid
-  * cells, severity sweeps, held-out attacks) and each iteration is a
-  * distributed job.
+  * split (one shuffle) → scale (one collected agg row) → windows for all
+  * three splits (one ordered exchange, keyed by split) → score → metric
+  * aggregations. The 3A severity sweep is one plan too (the grid is a
+  * broadcast cross join). Driver loops exist only where the reference's
+  * semantics are inherently iterative (grid cells, held-out attacks,
+  * importance repeats) and each iteration is a distributed job.
   */
 object Pipeline1 {
 
@@ -112,13 +113,11 @@ object Pipeline1 {
     // 5. sliding windows per split (W1/W2): label/state/attack from the
     //    window's LAST row; windows slide over the concatenated sorted
     //    split (crossing attack/state boundaries — the spec, SURVEY §7.4.2)
-    val featArray = array(features.map(col): _*)
-    val windows = Seq("train", "val", "test").map { s =>
-      SlidingWindows.slideGlobalChunked(
-        scaled.where(col("split") === s), orderCols, featArray,
-        config.seqLen, config.step, config.chunkSize)
-        .withColumn("split", lit(s))
-    }.reduce(_ unionByName _)
+    //    but never across splits — one windower pass keyed by split, so
+    //    the upstream plan runs once and later scans see one table
+    val windows = SlidingWindows.slideGlobalChunked(scaled, orderCols,
+        array(features.map(col): _*), config.seqLen, config.step,
+        config.chunkSize, groupCols = Seq("split"))
       .select(col("split"), col("win_id"), col("window"), col("y"),
         col(attackCol).as("attack"), col(stateCol).as("state"),
         col("state_bin").as("state_bin_last"))
@@ -284,63 +283,24 @@ object Pipeline2 {
 object Pipeline3 {
 
   /** 3A: severity sweep of seeded degradations over the test windows,
-    * re-scored per (kind, severity, repeat); G7 mean/std across repeats.
-    * The sweep is a deterministic driver loop (70 evaluations in the
-    * reference, pipeline_tests_power.py:255-379); each evaluation is one
-    * distributed job over the degraded windows. */
+    * re-scored per (kind, severity, repeat); G7 mean/std across repeats
+    * (70 evaluations in the reference, pipeline_tests_power.py:255-379).
+    *
+    * ONE plan (SURVEY §3.2): broadcast the (kind, severity, rep, seed)
+    * grid, cross join against the test windows, degrade with
+    * column-parameterized severity/seed, score once, aggregate once —
+    * 2 jobs instead of kinds×severities×repeats sequential evaluations.
+    * Data inflates by the grid size within the plan (the point: the
+    * whole sweep parallelizes across the cluster); batch the grid if
+    * windows × grid exceeds cluster memory. */
   def robustness(scored: DataFrame, model: graft.model.WindowModel,
       kinds: Seq[String] = Seq("packet_loss", "missing_variables"),
       maxSev: Double = 0.6, nSev: Int = 7, nRepeats: Int = 5,
       baseSeed: Long = 123L): DataFrame = {
     val spark = scored.sparkSession
     import spark.implicits._
-    // Every sweep evaluation re-reads the test windows; cache them for the
-    // loop's lifetime (all results reduce to driver tuples → safe to
-    // unpersist before returning).
-    val test = scored.where(col("split") === "test")
-      .select(col("win_id").cast("long").as("win_id"), col("window"), col("y"))
-      .cache()
-    val grid = Robustness.severityGrid(maxSev, nSev, nRepeats, baseSeed)
-    val rows = for {
-      kind <- kinds
-      (sev, rep, seed) <- grid
-    } yield {
-      val degraded = kind match {
-        case "packet_loss" =>
-          test.withColumn("window", Robustness.packetLoss(col("window"), col("win_id"), sev, seed))
-        case "missing_variables" =>
-          test.withColumn("window", Robustness.missingVariables(col("window"), col("win_id"), sev, seed))
-        case "clock_offset" =>
-          test.withColumn("window", Robustness.clockOffset(col("window"), col("win_id"), sev, seed))
-        case "drift" =>
-          test.withColumn("window", Robustness.drift(col("window"), col("win_id"), sev, seed))
-        case other => throw new IllegalArgumentException(s"unknown kind $other")
-      }
-      val rescored = model.transform(degraded)
-      val acc = rescored.agg(avg((col("y_pred") === col("y")).cast("double"))).head().getDouble(0)
-      (kind, sev, rep, acc)
-    }
-    test.unpersist(blocking = false)
-    rows.toDF("kind", "severity", "rep", "accuracy")
-      .groupBy("kind", "severity")
-      .agg(avg("accuracy").as("accuracy_mean"),
-        coalesce(stddev_samp(col("accuracy")), lit(0.0)).as("accuracy_std"))
-      .orderBy("kind", "severity")
-  }
-
-  /** 3A as ONE plan (SURVEY §3.2): broadcast the (kind, severity, rep,
-    * seed) grid, cross join against the test windows, degrade with
-    * column-parameterized severity/seed, score once, aggregate once —
-    * 2 jobs instead of kinds×severities×repeats sequential evaluations.
-    * Data inflates by the grid size within the plan (the point: the
-    * whole sweep parallelizes across the cluster); batch the grid if
-    * windows × grid exceeds cluster memory. */
-  def robustnessSweepPlan(scored: DataFrame, model: graft.model.WindowModel,
-      kinds: Seq[String] = Seq("packet_loss", "missing_variables"),
-      maxSev: Double = 0.6, nSev: Int = 7, nRepeats: Int = 5,
-      baseSeed: Long = 123L): DataFrame = {
-    val spark = scored.sparkSession
-    import spark.implicits._
+    val known = Set("packet_loss", "missing_variables", "clock_offset", "drift")
+    kinds.filterNot(known).foreach(k => throw new IllegalArgumentException(s"unknown kind $k"))
     val test = scored.where(col("split") === "test")
       .select(col("win_id").cast("long").as("win_id"), col("window"), col("y"))
     val grid = for {

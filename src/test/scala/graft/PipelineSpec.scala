@@ -44,6 +44,50 @@ class PipelineSpec extends SparkSpec {
     assert(result.windows.where(col("y").isNull).count() == 0)
   }
 
+  test("pipeline1 and model.transform run after an Observation in the session") {
+    // Once a session has run `observe` it holds a non-serializable
+    // ObservationManager; a fitted model that keeps its training summary
+    // drags that session into every scoring task closure. A child session
+    // keeps the observation away from the other specs' shared session.
+    val s = spark.newSession()
+    val df = s.createDataFrame(java.util.Arrays.asList(power.collect(): _*), power.schema)
+    val obs = org.apache.spark.sql.Observation("rows")
+    df.observe(obs, count(lit(1)).as("n")).collect()
+    assert(obs.get("n") == 1200L)
+    val r = Pipeline1.run(s, df, Seq("current_ma", "power_mw"), "Attack", "State",
+      Seq(col("t")), Scorers.Logistic(maxIter = 5),
+      Pipeline1.Config(seqLen = 10, step = 5, fprTarget = 0.05, chunkSize = 256))
+    assert(r.multiclass.head().getAs[Double]("accuracy") > 0.5)
+    assert(r.model.transform(r.windows).where(col("y_pred").isNull).count() == 0)
+  }
+
+  test("pipeline1: one windower pass keyed by split equals the per-split windowers") {
+    // the per-split form: one slideGlobalChunked call per split, unioned —
+    // rebuilt from the same labels, split and scaler the pipeline used
+    val labeled = power
+      .withColumn("state_bin", graft.ops.Labels.stateBin(col("State")))
+      .withColumn("label_bin", graft.ops.Labels.binaryLabel(col("Attack")))
+    val encoded = graft.ops.Labels.encodeLabel(labeled, result.encoder, "label_bin", "y")
+    val scaled = graft.ops.Stats.applyStandardScaler(
+      graft.ops.ChronoSplit.withSplit(encoded, Seq("Attack", "State"), Seq(col("t"))),
+      result.scaler)
+    val perSplit = Seq("train", "val", "test").map { s =>
+      graft.ops.SlidingWindows.slideGlobalChunked(scaled.where(col("split") === s),
+        Seq(col("t")), array(col("current_ma"), col("power_mw")), 10, 5, 256)
+    }.reduce(_ unionByName _)
+      .select(col("split"), col("win_id"), col("window"), col("y"),
+        col("Attack").as("attack"), col("State").as("state"),
+        col("state_bin").as("state_bin_last"))
+    def rows(df: org.apache.spark.sql.DataFrame) = df.select(perSplit.columns.map(col): _*)
+      .collect().map(_.toSeq).sortBy(r => (r(0).toString, r(1).asInstanceOf[Long])).toSeq
+    val got = rows(result.windows)
+    assert(got.nonEmpty && got == rows(perSplit))
+    // every later scan of the cached window table (the fits, the metric
+    // jobs, 3A, 3B) runs one task per shuffle partition, not three
+    assert(result.windows.rdd.getNumPartitions ==
+      spark.conf.get("spark.sql.shuffle.partitions").toInt)
+  }
+
   test("pipeline1: binary task learns the separable signal (accuracy > 0.9 on test)") {
     val acc = result.multiclass.head().getAs[Double]("accuracy")
     assert(acc > 0.9, s"accuracy $acc")
@@ -178,19 +222,50 @@ class PipelineSpec extends SparkSpec {
     assert(rows.last._2 <= rows.head._2 + 1e-9)
   }
 
+  /** The driver-loop form of the 3A sweep — one scoring job per (kind,
+    * severity, repeat) — kept as the reference the one-plan
+    * `Pipeline3.robustness` must equal. */
+  private def robustnessLoop(scored: org.apache.spark.sql.DataFrame,
+      model: graft.model.WindowModel, kinds: Seq[String], maxSev: Double,
+      nSev: Int, nRepeats: Int, baseSeed: Long = 123L) = {
+    import graft.ops.Robustness
+    val test = scored.where(col("split") === "test")
+      .select(col("win_id").cast("long").as("win_id"), col("window"), col("y"))
+    val rows = for {
+      kind <- kinds
+      (sev, rep, seed) <- Robustness.severityGrid(maxSev, nSev, nRepeats, baseSeed)
+    } yield {
+      val degraded = kind match {
+        case "packet_loss" => Robustness.packetLoss(col("window"), col("win_id"), sev, seed)
+        case "missing_variables" =>
+          Robustness.missingVariables(col("window"), col("win_id"), sev, seed)
+      }
+      val acc = model.transform(test.withColumn("window", degraded))
+        .agg(avg((col("y_pred") === col("y")).cast("double"))).head().getDouble(0)
+      (kind, sev, rep, acc)
+    }
+    rows.toDF("kind", "severity", "rep", "accuracy")
+      .groupBy("kind", "severity")
+      .agg(avg("accuracy").as("accuracy_mean"),
+        coalesce(stddev_samp(col("accuracy")), lit(0.0)).as("accuracy_std"))
+  }
+
   test("pipeline3A single-plan sweep equals the driver-loop sweep exactly") {
-    val loop = Pipeline3.robustness(result.scored, result.model,
-      kinds = Seq("packet_loss", "missing_variables"), maxSev = 0.4, nSev = 3, nRepeats = 2)
-      .collect().map(r => (r.getString(0), r.getDouble(1)) ->
+    val kinds = Seq("packet_loss", "missing_variables")
+    def byKey(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getString(0), r.getDouble(1)) ->
         (r.getAs[Double]("accuracy_mean"), r.getAs[Double]("accuracy_std"))).toMap
-    val plan = Pipeline3.robustnessSweepPlan(result.scored, result.model,
-      kinds = Seq("packet_loss", "missing_variables"), maxSev = 0.4, nSev = 3, nRepeats = 2)
-      .collect().map(r => (r.getString(0), r.getDouble(1)) ->
-        (r.getAs[Double]("accuracy_mean"), r.getAs[Double]("accuracy_std"))).toMap
-    assert(loop.keySet == plan.keySet)
+    val loop = byKey(robustnessLoop(result.scored, result.model, kinds,
+      maxSev = 0.4, nSev = 3, nRepeats = 2))
+    val plan = byKey(Pipeline3.robustness(result.scored, result.model, kinds,
+      maxSev = 0.4, nSev = 3, nRepeats = 2))
+    assert(loop.keySet == plan.keySet && loop.size == 6)
     loop.foreach { case (k, (m, s)) =>
       assert(approx(plan(k)._1, m, 1e-12) && approx(plan(k)._2, s, 1e-12), s"$k")
     }
+    assert(intercept[IllegalArgumentException](
+      Pipeline3.robustness(result.scored, result.model, Seq("typo"))).getMessage
+      .contains("typo"))
   }
 
   test("pipeline3B: leave-one-attack-out returns a row per held-out attack") {

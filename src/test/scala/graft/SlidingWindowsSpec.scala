@@ -59,6 +59,34 @@ class SlidingWindowsSpec extends SparkSpec {
     }
   }
 
+  test("grouped chunked windower equals slideGlobal run on each group alone") {
+    // groups of 40, 23 and 3 rows, interleaved in time; chunk 9 is smaller
+    // than groups a and b, and group c is shorter than seqLen 4 and 9
+    val sizes = Seq("a" -> 40, "b" -> 23, "c" -> 3)
+    val df = sizes.zipWithIndex.flatMap { case ((g, n), o) =>
+      (1 to n).map(j => (g, (j * 3 + o).toLong, j * 10.0 + o))
+    }.toDF("g", "t", "x").repartition(5)
+    def rows(d: org.apache.spark.sql.DataFrame) =
+      d.select($"g", $"win_id", $"window").collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getSeq[Double](2)))
+        .sortBy(r => (r._1, r._2)).toSeq
+    for {
+      seqLen <- Seq(1, 4, 9)
+      step <- Seq(1, 3)
+      chunk <- Seq(9, 16, 512)
+    } {
+      val want = sizes.flatMap { case (g, _) =>
+        rows(SlidingWindows.slideGlobal(df.where($"g" === g), Seq(col("t")), col("x"),
+          seqLen, step).withColumn("win_id", $"win_id".cast("long")))
+      }.sortBy(r => (r._1, r._2))
+      val got = rows(SlidingWindows.slideGlobalChunked(df, Seq(col("t")), col("x"),
+        seqLen, step, chunk, groupCols = Seq("g")))
+      assert(got == want, s"seqLen=$seqLen step=$step chunk=$chunk")
+      assert(got.count(_._1 == "c") == (if (seqLen > 3) 0 else 1 + (3 - seqLen) / step))
+      assert(got.filter(_._1 == "a").map(_._2).headOption.contains(seqLen.toLong))
+    }
+  }
+
   test("partitioned slide never crosses group boundaries") {
     val df = Seq(("a", 1L, 1.0), ("a", 2L, 2.0), ("a", 3L, 3.0),
       ("b", 4L, 4.0), ("b", 5L, 5.0)).toDF("g", "t", "x")
