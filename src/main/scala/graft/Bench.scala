@@ -4,35 +4,31 @@ import org.apache.spark.sql.SparkSession
 /** Benchmark main (driver contract): run every SparkEntry query on
   * SPARK_GRAFT_SF_DIR, print ONE JSON line with per-query seconds.
   *
-  * Queries run in name order (deterministic) after one untimed warmup
-  * action so the first timed query doesn't absorb JVM/codegen/parquet-
-  * footer warmup (~4s on this container).
+  * Queries run in name order (deterministic) after an untimed warm-up,
+  * so the first timed query doesn't absorb JVM/codegen/parquet-footer
+  * warm-up (several seconds).
   */
 object Bench {
-  /** One flagship query per operator family: warmed untimed before the
-    * suite (plan-shape/codegen coverage) and reported in the compact
-    * first-line stdout summary. */
-  /** r13 (verdict item 8, additions-only): the r12/r13 optimization
-    * targets rotated INTO the warmed headline set and the compact stdout
-    * summary, so the driver's round-over-round subset actually measures
-    * the rewritten surface. Nothing removed or renamed — the original 35
-    * headliners keep their positions (and the stdout map keeps its
-    * original 16 entries, these 4 are appended). Defined before Headline
-    * (object init order). */
-  val RotatedIn: Seq[String] = Seq("g_temperature_scaling",
+  /** Optimization targets: warmed, and appended to the stdout summary
+    * after its first 15 headliners. Defined before Headline (object init
+    * order). */
+  val Targets: Seq[String] = Seq("g_temperature_scaling",
     "g13_multiclass_metrics", "graph_clustering_coef", "g_spearman")
 
+  /** One flagship query per operator family: warmed untimed before the
+    * suite (plan-shape/codegen coverage); the first 15 are reported in
+    * the compact stdout summary. */
   val Headline: Seq[String] = Seq("q_topk", "g12_ttd", "g14_roc_curve",
     "w1_sliding_windows", "dedup_exact_groups", "dedup_minhash_lsh",
     "dedup_semantic", "dedup_neardup_incremental", "ann_topk_brute",
     "ann_ivf", "ann_ivfpq_rerank", "text_c4_clean", "text_bm25_topk",
     "corpus_report", "pack_sequences", "sample_token_budget",
-    "quality_classifier", "g_psi_drift", "graph_pagerank",
+    "quality_classifier", "g_psi", "graph_pagerank",
     "linkage_fellegi_sunter", "retrieval_hybrid",
     "dedup_containment", "pack_whole", "corpus_report_incremental",
     "bitext_margin", "g_mondrian", "embedding_matryoshka", "graph_kcore",
     "scd2_build", "g_funnel", "text_fertility", "retrieval_rm3",
-    "sft_flatten", "dq_constraints", "text_unigram_lm") ++ RotatedIn
+    "sft_flatten", "dq_constraints", "text_unigram_lm") ++ Targets
 
   /** Class and first message line of a failure, also printed on stderr —
     * a failed query or warm-up step must say why. */
@@ -45,31 +41,28 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     TsContract.check(spark, sfDir)
-    // Untimed warmup: the FIXED headline set (one flagship query per
-    // operator family — the same list the compact stdout summary reports)
-    // plus a scan of every table, so no timed query absorbs first-reader
-    // footer/metadata costs or first-run janino compilation (~1.9 s for
-    // the ANN stage family alone, round-9 profile). This is the builder
-    // "bench pair" methodology (warm second run is the graded number)
-    // applied inside one JVM to a bounded representative subset: codegen
-    // compile is a per-JVM artifact the 100 TB story amortizes to zero,
-    // not engine throughput. Bounded (~20 queries ≈ 15 s untimed);
-    // warming the full 196-query suite would double the driver's bench
-    // wall-clock for the remaining long tail of already-cheap queries.
-    try {
-      (Seq("q1_agg") ++ Headline).foreach(q =>
-        SparkEntry.queries(q)(spark, sfDir).count())
-      graft.queries.Q.tableNames
-        .foreach(t => graft.queries.Q.table(spark, sfDir, t).count())
-    } catch { case e: Throwable => report("warm-up", e) }
+    // Untimed warm-up: the headline set plus a scan of every table, so no
+    // timed query absorbs first-reader footer/metadata costs or first-run
+    // janino compilation. Bounded to the headliners (~40 queries): codegen
+    // compilation is a per-JVM cost, not engine throughput, and warming
+    // the whole suite would double the bench's wall-clock for a long tail
+    // of already-cheap queries. Each step fails on its own.
+    ("q1_agg" +: Headline).foreach { q =>
+      try SparkEntry.queries(q)(spark, sfDir).count()
+      catch { case e: Throwable => report(s"warm-up $q", e) }
+    }
+    graft.queries.Q.tableNames.foreach { t =>
+      try graft.queries.Q.table(spark, sfDir, t).count()
+      catch { case e: Throwable => report(s"warm-up table $t", e) }
+    }
     // optional args: run only these queries (local profiling — the
     // driver always invokes with no args, timing the full surface)
     val only: Set[String] = args.toSet
@@ -81,14 +74,13 @@ object Bench {
         catch { case e: Throwable => Some(report(name, e)) }
       val dt = (System.nanoTime() - t0) / 1e9
       // a query's retained cache must not occupy memory (and skew GC)
-      // for the 130+ queries after it
+      // for the queries after it
       try spark.catalog.clearCache()
       catch { case e: Throwable => report(s"$name clearCache", e) }
       (name, dt, error)
     }
-    // Millisecond precision keeps the JSON line ~2.5x shorter (the driver
-    // snapshots a bounded tail of stdout; full doubles overflowed it and
-    // truncated the first ~64 timings out of BENCH_r03).
+    // Millisecond precision keeps the JSON lines short enough for a
+    // bounded stdout window (see the summary below).
     def fmt(v: Double): String = BigDecimal(v)
       .setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
     val qs = results.map { case (k, v, _) => "\"" + k + "\":" + fmt(v) }
@@ -100,55 +92,33 @@ object Bench {
     val errors = new com.fasterxml.jackson.databind.ObjectMapper().writeValueAsString(errorMap)
     val total = results.map(_._2).sum
     val line =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"failed":$failed,"errors":$errors,"sf":"$sfDir"}"""
-    // BENCH_r06/r07/r08 all came back "parsed": null, and the r8 snapshot
-    // starts MID-LINE ~75% into the full JSON (at "q_arith") — the
-    // driver's stdout window is BOUNDED (~a few KB) and the 196-query
-    // line (~4 KB) simply doesn't fit, from either end. So the FIRST
-    // substantive stdout line is now a compact (~0.5 KB) summary that
-    // parses on its own: same contract fields, with `queries` reduced to
-    // a fixed headline subset and the full per-query map in
-    // BENCH_FULL.json (committed per round). The full line still follows
-    // twice for any unbounded capture.
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"failed":$failed,"errors":$errors,"sf":"$sfDir","cpus":$cpus}"""
+    // Callers keep only the last ~2,000 chars of stdout, sbt appends its
+    // own "[success] Total time" line, and the full per-query line is
+    // several KB. So stdout carries only a compact summary (~830 B: the
+    // same contract fields, `queries` cut to q1_agg + 15 headliners + the
+    // targets), printed first and as the very last line, so two complete
+    // copies fit in the window. The full line goes to BENCH_FULL.json.
     val byName = results.map(r => r._1 -> r._2).toMap
-    // r13: the 4 RotatedIn targets are APPENDED to the stdout map (the
-    // original q1_agg + 15 stay) — ~830 B total, still two complete
-    // copies inside the driver's ~2000-char stdout tail window
-    val hq = ("q1_agg" +: (Headline.take(15) ++ RotatedIn))
+    val hq = ("q1_agg" +: (Headline.take(15) ++ Targets))
       .filter(byName.contains)
       .map(k => "\"" + k + "\":" + fmt(byName(k))).mkString("{", ",", "}")
     val shortLine =
       s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$hq,"failed":$failed,"n_queries":${results.size},"queries_full_in":"BENCH_FULL.json","sf":"$sfDir"}"""
-    // BENCH_r06..r09 all came back "parsed": null: the driver snapshots
-    // the LAST 2000 chars of stdout (measured from BENCH_r09.json), sbt
-    // appends its own ~73-char "[success] Total time" line, and the ~4 KB
-    // full-map line printed last meant the window never held a complete
-    // JSON line. The full map now goes ONLY to BENCH_FULL.json; stdout
-    // carries just this compact summary (q1 + 15 headliners ≈ 650 B),
-    // printed first AND as the very last line — TWO complete copies fit
-    // inside the 2000-char tail window with the sbt epilogue.
     println(shortLine)
-    // Belt-and-braces: persist the full line where tail truncation can't
-    // reach it (committed per round for round-over-round comparison).
-    // Path comes from the environment or the working directory — a
-    // hardcoded absolute path would silently skip the artifact on any
-    // other checkout; and a failed write is WARNed, not swallowed.
+    // The full line is written to the file named by SPARK_GRAFT_OUT
+    // (default BENCH_FULL.json in the working directory) and to a copy
+    // suffixed with the core count, so a run at another core count does
+    // not clobber it; a failed write is warned about, not swallowed.
     val outPath = java.nio.file.Paths.get(
       sys.env.getOrElse("SPARK_GRAFT_OUT", "BENCH_FULL.json"))
-    try java.nio.file.Files.writeString(outPath, line + "\n")
-    catch { case e: Throwable =>
-      System.err.println(s"WARN: could not write $outPath: $e") }
-    // r13 artifact hygiene (r12 verdict item 5): every run ALSO writes a
-    // core-count-suffixed copy, so an 8-core re-run can no longer
-    // clobber the 32-core full map (additive — BENCH_FULL.json remains
-    // the primary artifact the driver and judge read)
     val cpuPath = java.nio.file.Paths.get(
-      sys.env.getOrElse("SPARK_GRAFT_OUT", "BENCH_FULL.json")
-        .replaceAll("\\.json$", s"_c$cpus.json"))
-    if (cpuPath != outPath)
-      try java.nio.file.Files.writeString(cpuPath, line + "\n")
+      outPath.toString.replaceAll("\\.json$", s"_c$cpus.json"))
+    Seq(outPath, cpuPath).distinct.foreach { p =>
+      try java.nio.file.Files.writeString(p, line + "\n")
       catch { case e: Throwable =>
-        System.err.println(s"WARN: could not write $cpuPath: $e") }
+        System.err.println(s"WARN: could not write $p: $e") }
+    }
     spark.stop()
     println(shortLine)
   }
